@@ -39,8 +39,6 @@ URLs (reference k=3, ``src/aggressive_pr_scraper.py:302``) or the round cap
 from __future__ import annotations
 
 import datetime as dt
-import os
-import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -536,58 +534,57 @@ class Crawler:
             # same reason the per-round commit pool is: each SnapshotTable
             # commit is independent and atomic, and `rounds` (the resume
             # barrier) is only bootstrapped after every future resolves.
-            pool = ThreadPoolExecutor(max_workers=4)
-            futs = [
-                # seen carries the same hash bucket as the frontier; every
-                # append is partitioned by it so the discovery backstop can
-                # prune to suspect buckets (round-1 verdict #3). Empty-table
-                # bootstraps are schema-only manifest commits — no Spark
-                # write job each.
-                pool.submit(
-                    self.t["seen"].init_empty,
-                    "url_hash BIGINT, bucket INT, crawl_ts TIMESTAMP",
-                    {"op": "init"},
-                ),
-                pool.submit(
-                    self.t["results"].init_empty,
-                    "url STRING, url_hash BIGINT, warc_ts TIMESTAMP, "
-                    "status STRING, text STRING, lang STRING, round INT",
-                    {"op": "init"},
-                ),
-                pool.submit(self.t["entities"].init_empty, ENTITIES_DDL, {"op": "init"}),
-                # host_state: one row per registrable domain seen so far;
-                # rate from robots crawl_delay (reference analog: 0.1 s/req,
-                # src/config.py:81). Append-only thereafter: rounds append
-                # only touched domains (see _read_host_state), compact()
-                # folds. asof_round=-1 so a domain touched in round 0 (which
-                # appends an asof_round=0 row) never ties with its init row
-                # in the latest-wins window; the lazy refill is unaffected
-                # because init tokens start at capacity (already pinned at
-                # the cap, extra elapsed time is a no-op).
-                pool.submit(
-                    self.t["host_state"].overwrite,
-                    self._new_host_rows(
-                        fr.select("registrable_domain").distinct(), asof_round=-1
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                futs = [
+                    # seen carries the same hash bucket as the frontier; every
+                    # append is partitioned by it so the discovery backstop can
+                    # prune to suspect buckets (round-1 verdict #3). Empty-table
+                    # bootstraps are schema-only manifest commits — no Spark
+                    # write job each.
+                    pool.submit(
+                        self.t["seen"].init_empty,
+                        "url_hash BIGINT, bucket INT, crawl_ts TIMESTAMP",
+                        {"op": "init"},
                     ),
-                    {"op": "init"},
-                ),
-            ]
+                    pool.submit(
+                        self.t["results"].init_empty,
+                        "url STRING, url_hash BIGINT, warc_ts TIMESTAMP, "
+                        "status STRING, text STRING, lang STRING, round INT",
+                        {"op": "init"},
+                    ),
+                    pool.submit(self.t["entities"].init_empty, ENTITIES_DDL, {"op": "init"}),
+                    # host_state: one row per registrable domain seen so far;
+                    # rate from robots crawl_delay (reference analog: 0.1 s/req,
+                    # src/config.py:81). Append-only thereafter: rounds append
+                    # only touched domains (see _read_host_state), compact()
+                    # folds. asof_round=-1 so a domain touched in round 0 (which
+                    # appends an asof_round=0 row) never ties with its init row
+                    # in the latest-wins window; the lazy refill is unaffected
+                    # because init tokens start at capacity (already pinned at
+                    # the cap, extra elapsed time is a no-op).
+                    pool.submit(
+                        self.t["host_state"].overwrite,
+                        self._new_host_rows(
+                            fr.select("registrable_domain").distinct(), asof_round=-1
+                        ),
+                        {"op": "init"},
+                    ),
+                ]
 
-            # distributed fold of the seed keys into the fresh Bloom; the
-            # returned key count doubles as the frontier cardinality (no
-            # separate count job). Folded from the cached `fr` — the written
-            # frontier holds exactly these rows by construction, so the old
-            # read-back of the fresh parquet was a redundant scan.
-            if self._bloom is not None:
-                self._bloom.close()  # release superseded broadcast handles
-            self._bloom = self._empty_bloom()
-            self._known_count, n_blocked = self._bloom.add_df(
-                fr.select("url_hash", "robots_allowed"),
-                false_count_of="robots_allowed",
-            )
-            for f in futs:
-                f.result()
-            pool.shutdown()
+                # distributed fold of the seed keys into the fresh Bloom; the
+                # returned key count doubles as the frontier cardinality (no
+                # separate count job). Folded from the cached `fr` — the written
+                # frontier holds exactly these rows by construction, so the old
+                # read-back of the fresh parquet was a redundant scan.
+                if self._bloom is not None:
+                    self._bloom.close()  # release superseded broadcast handles
+                self._bloom = self._empty_bloom()
+                self._known_count, n_blocked = self._bloom.add_df(
+                    fr.select("url_hash", "robots_allowed"),
+                    false_count_of="robots_allowed",
+                )
+                for f in futs:
+                    f.result()
         finally:
             fr.unpersist(blocking=False)
         # every allowed seed starts 'discovered': the active-row bound that
@@ -909,7 +906,8 @@ class Crawler:
     # ---------------------------------------------------------------- resume
     def resume_round(self) -> int:
         """Next round to run; rolls tables back to the last completed round's
-        recorded snapshots (exactly-once semantics, SURVEY.md T6)."""
+        recorded snapshots, or to the bootstrap snapshots when no round
+        completed (exactly-once semantics, SURVEY.md T6)."""
         rounds = self.t["rounds"].read(self.spark)
         self._prev_round_empty = False
         last = (
@@ -921,26 +919,25 @@ class Crawler:
         if self._bloom is not None:
             self._bloom.close()
             self._bloom = None
-        if not last:
-            self._known_count = self.t["frontier"].read(self.spark).count()
-            self._trans_rows = self.t["transitions"].read(self.spark).count()
-            self._next_round_bound = self._count_active_rows()
-            self._bloom = PartitionedBloom.build(
-                self.t["frontier"].read(self.spark), "url_hash",
-                n_buckets=self.cfg.n_buckets,
-                expected_per_bucket=max(1000, self.cfg.bloom_expected_keys // self.cfg.n_buckets),
-                fpp=self.cfg.bloom_fpp,
-            )
-            return 0
-        row = last[0]
-        for name, col in (
+        snap_cols = (
             ("frontier", "frontier_snap"), ("seen", "seen_snap"),
             ("results", "results_snap"), ("host_state", "host_snap"),
             ("metrics", "metrics_snap"), ("transitions", "transitions_snap"),
             ("entities", "entities_snap"),
-        ):
-            if self.t[name].current_snapshot_id() != row[col]:
-                self.t[name].rollback(row[col])
+        )
+        if last:
+            target = {name: last[0][col] for name, col in snap_cols}
+        else:
+            # a crash inside round 0 leaves commits but no rounds row: the
+            # recovery point is each table's bootstrap snapshot
+            target = {
+                name: [s.snapshot_id for s in self.t[name].snapshots()
+                       if s.summary.get("op") == "init"][-1]
+                for name, _ in snap_cols
+            }
+        for name, sid in target.items():
+            if self.t[name].current_snapshot_id() != sid:
+                self.t[name].rollback(sid)
         self._known_count = self.t["frontier"].read(self.spark).count()
         self._trans_rows = self.t["transitions"].read(self.spark).count()
         self._next_round_bound = self._count_active_rows()
@@ -953,7 +950,7 @@ class Crawler:
             expected_per_bucket=max(1000, self.cfg.bloom_expected_keys // self.cfg.n_buckets),
             fpp=self.cfg.bloom_fpp,
         )
-        return int(row["round"]) + 1
+        return int(last[0]["round"]) + 1 if last else 0
 
     def _count_active_rows(self) -> int:
         """Exact count of rows the scheduler can still see (active
@@ -1062,7 +1059,10 @@ class Crawler:
             self._persistent_rdd_ids() if self.cfg.truncate_lineage else None
         )
         try:
-            return self._run_round_impl(k, cached)
+            # the with-exit waits for in-flight commit futures, so a failed
+            # round never frees blocks that a background append still reads
+            with ThreadPoolExecutor(max_workers=6) as pool:
+                return self._run_round_impl(k, cached, pool)
         except BaseException:
             # ADVICE r5 (low): without this, an exception mid-round leaks the
             # round's localCheckpoint blocks — and the NEXT round's base
@@ -1072,7 +1072,7 @@ class Crawler:
             self._release_round_blocks(cached)
             raise
 
-    def _run_round_impl(self, k: int, cached: list) -> dict:
+    def _run_round_impl(self, k: int, cached: list, pool: ThreadPoolExecutor) -> dict:
         cfg, spark = self.cfg, self.spark
         now = self.now(k)
         now_lit = F.lit(now)
@@ -1378,7 +1378,6 @@ class Crawler:
         n_raw_links = sum(r["raw_links"] or 0 for r in stage_rows if r["fstatus"] == "fetched")
         n_transient = sum(r["n"] for r in stage_rows if r["fstatus"] == "transient")
         n_missing = n_batch - n_ok - n_transient
-        pool = ThreadPoolExecutor(max_workers=6)
 
         def submit(name, fn, *args):
             # job descriptions are thread-local: label inside the pool thread
@@ -1660,7 +1659,6 @@ class Crawler:
             fut_entities.result() if fut_entities is not None
             else self.t["entities"].current_snapshot_id()
         )
-        pool.shutdown()
         tick("w_all")
 
         wall_ms = int((time.monotonic() - t_start) * 1000)
@@ -1721,14 +1719,12 @@ class Crawler:
                 + int(n_new) - int(n_new_blocked)
             )
         self._prev_round_empty = False
-        out = {
+        return {
             "round": k, "eligible": n_batch, "fetched": n_ok,
             "transient": n_transient, "missing": n_missing,
             "links": int(n_raw_links), "new": n_new, "wall_ms": wall_ms,
+            "prof": prof,
         }
-        if os.environ.get("SPARK_GRAFT_PROFILE"):
-            out["prof"] = prof
-        return out
 
     def checkpoint_stats(self) -> DataFrame:
         """A6: checkpoint-statistics rollup over the rounds lineage table
@@ -1753,11 +1749,7 @@ class Crawler:
             log=None) -> list[dict]:
         """Run (or resume) the crawl to convergence; returns round stats."""
         if seeds is not None:
-            t_i = time.monotonic()
             self.init_frontier(seeds)
-            if os.environ.get("SPARK_GRAFT_PROFILE"):
-                print(f"  [prof] init_frontier {time.monotonic() - t_i:.2f}s",
-                      file=sys.stderr)
             start = 0
         else:
             start = self.resume_round()
@@ -1815,9 +1807,5 @@ class Crawler:
                         t.expire_snapshots(keep_last=self.cfg.expire_snapshots_keep)
         # fold the transitions delta into the frontier so readers see final
         # states without replaying the delta (resume-safe: rollback restores)
-        t_c = time.monotonic()
         self.compact()
-        if os.environ.get("SPARK_GRAFT_PROFILE"):
-            print(f"  [prof] final compact {time.monotonic() - t_c:.2f}s",
-                  file=sys.stderr)
         return stats

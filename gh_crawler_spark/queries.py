@@ -32,7 +32,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Spread an unsplittable small scan over the cores before per-row-HEAVY
-    work (tokenize/shingle/Arrow decode). The sandbox parquet tables are
+    work (tokenize/shingle). The sandbox parquet tables are
     single-file/single-row-group, so a tokenize-class operator otherwise runs
     its whole map stage as ONE task (guide §2.5: unsplittable input —
     repartition immediately after the read). Gated on the scan's partition
@@ -40,9 +40,12 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     only to heavy-map queries: for projection-only queries the extra
     exchange+stage measurably COSTS on the cold single-shot path (A/B:
     frontier_pipeline 8.8 s vs 2.6 s cold) while buying nothing — their
-    per-row work is tiny next to stage overhead. Round-robin order is
-    irrelevant to results: the driver compares under canonical row ordering,
-    and no spread consumer does an order-sensitive float aggregation."""
+    per-row work is tiny next to stage overhead. td_media_meta's Arrow
+    decode is left out for the same reason (A/B at sf 0.01, local[4] on a
+    4-core host: 0.51 s plain vs 0.70 s spread, 12 of 12 pairs). Round-robin
+    order is irrelevant to results: the driver compares under canonical row
+    ordering, and no spread consumer does an order-sensitive float
+    aggregation."""
     n = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         df = df.repartition(n)
@@ -946,7 +949,7 @@ def q_td_media_meta(spark, sf_dir):
     (deterministic fake decode; formula mirrored in the SQL oracle)."""
     from gh_crawler_spark.operators.multimodal import as_media_table, extract_media_meta
 
-    media = as_media_table(_spread(spark, _t(spark, sf_dir, "documents")))
+    media = as_media_table(_t(spark, sf_dir, "documents"))
     return extract_media_meta(media, deterministic_fake=True)
 
 

@@ -104,6 +104,51 @@ def test_resume_discards_halfcommitted_round(spark, corpus, baseline, tmp_path):
     assert _crawl_outcome(spark, resumed) == baseline
 
 
+def test_failed_round_waits_for_commits_then_frees_blocks(spark, corpus, baseline, tmp_path,
+                                                          monkeypatch):
+    """A discovery-side exception while the background results append is
+    still running: run_round must wait for that append before it frees the
+    round's blocks and re-raises, leave no pinned blocks behind, and a fresh
+    crawler must resume to the clean outcome."""
+    import threading
+    import time
+
+    from gh_crawler_spark import crawler as crawler_mod
+
+    pages, seeds, robots = corpus
+    c = Crawler(spark, _cfg(tmp_path / "fault"), pages, robots)
+    c.init_frontier(seeds)
+    c.pages_idx.count()  # register the long-lived fetch index before the snapshot
+    before = c._persistent_rdd_ids()
+
+    gate, appended = threading.Event(), threading.Event()
+    real_append = c.t["results"].append
+
+    def slow_append(*args, **kw):
+        try:
+            assert gate.wait(timeout=120)
+            time.sleep(0.5)
+            return real_append(*args, **kw)
+        finally:
+            appended.set()
+
+    def failing_resolve(*args, **kw):
+        gate.set()
+        raise RuntimeError("injected discovery failure")
+
+    c.t["results"].append = slow_append
+    monkeypatch.setattr(crawler_mod, "resolve_unseen", failing_resolve)
+    with pytest.raises(RuntimeError, match="injected discovery failure"):
+        c.run_round(0)
+    assert appended.is_set(), "run_round re-raised while a commit was in flight"
+    assert c._persistent_rdd_ids() == before
+
+    monkeypatch.undo()
+    resumed = Crawler(spark, _cfg(tmp_path / "fault"), pages, robots)
+    resumed.run(seeds=None)
+    assert _crawl_outcome(spark, resumed) == baseline
+
+
 def test_parallelism_invariance(spark, corpus, baseline, tmp_path):
     """Same outcome at different shuffle parallelism (N vs 4N analog):
     the baseline ran at 8 shuffle partitions; rerun at 2."""
@@ -271,14 +316,22 @@ def test_link_scope_filter_matches_simulator(spark, corpus, baseline, tmp_path):
     assert len(seen) < len(baseline_seen)
 
 
-def test_copartitioned_fetch_join_equivalent(spark, corpus, baseline, tmp_path):
-    """broadcast_fetch=False (batch-refresh shape): the co-partitioned
-    fetch join — corpus persisted hash-partitioned on url_hash, batch
-    shuffled to match, nothing broadcast — produces the identical crawl."""
+@pytest.mark.parametrize("override", [
+    # batch-refresh shape: corpus persisted hash-partitioned on url_hash,
+    # batch shuffled to match, nothing broadcast in the fetch join
+    {"broadcast_fetch": False},
+    # 10^7+-domain shape: host_state and robots join as plain equi-joins,
+    # AQE picks the strategy at runtime
+    {"broadcast_dims": False},
+    # recompute-on-executor-loss shape: plain persist/unpersist, full lineage
+    {"truncate_lineage": False},
+], ids=lambda o: next(iter(o)))
+def test_config_path_equivalent(spark, corpus, baseline, tmp_path, override):
+    """Every shipped alternative config path produces the identical crawl."""
     import dataclasses
 
     pages, seeds, robots = corpus
-    cfg = dataclasses.replace(_cfg(tmp_path / "cp"), broadcast_fetch=False)
+    cfg = dataclasses.replace(_cfg(tmp_path / "cfg"), **override)
     c = Crawler(spark, cfg, pages, robots)
     c.run(seeds=seeds)
     assert _crawl_outcome(spark, c) == baseline
@@ -292,7 +345,6 @@ def test_small_round_fast_path_equivalent(spark, corpus, baseline, tmp_path):
     under-predict a round's scheduled batch, and the bucket pre-probe must
     actually fire (prof carries small_probe)."""
     import dataclasses
-    import os
 
     pages, seeds, robots = corpus
     cfg_off = dataclasses.replace(_cfg(tmp_path / "sroff"), small_round_threshold=0)
@@ -310,11 +362,7 @@ def test_small_round_fast_path_equivalent(spark, corpus, baseline, tmp_path):
         return s
 
     on.run_round = rr
-    os.environ["SPARK_GRAFT_PROFILE"] = "1"
-    try:
-        on.run(seeds=seeds)
-    finally:
-        del os.environ["SPARK_GRAFT_PROFILE"]
+    on.run(seeds=seeds)
     assert _crawl_outcome(spark, on) == baseline
     assert all(b is None or elig <= b for b, elig, _ in checks)
     assert any("small_probe" in prof for _, _, prof in checks)
@@ -525,19 +573,6 @@ def test_metrics_dedup_recorded_once(spark, corpus, tmp_path):
             .collect()[0]["d"]
         )
         assert got == s["links"] - s["new"]
-
-
-def test_no_broadcast_dims_equivalent(spark, corpus, baseline, tmp_path):
-    """broadcast_dims=False (the 10^7+-domain shape): host_state and robots
-    join as plain equi-joins with AQE choosing the strategy at runtime —
-    identical crawl outcome, nothing force-broadcast."""
-    import dataclasses
-
-    pages, seeds, robots = corpus
-    cfg = dataclasses.replace(_cfg(tmp_path / "nbd"), broadcast_dims=False)
-    c = Crawler(spark, cfg, pages, robots)
-    c.run(seeds=seeds)
-    assert _crawl_outcome(spark, c) == baseline
 
 
 def test_seen_files_binpacked_at_compact(spark, corpus, tmp_path):
